@@ -1,0 +1,10 @@
+package org.apache.spark.perfbench
+
+import org.apache.spark.SparkContext
+
+/** Access to the listener bus's drain, which Spark keeps package-private. */
+object ListenerBus {
+  /** Block until every event posted so far has reached the listeners. */
+  def drain(sc: SparkContext, timeoutMs: Long = 30000L): Unit =
+    sc.listenerBus.waitUntilEmpty(timeoutMs)
+}
