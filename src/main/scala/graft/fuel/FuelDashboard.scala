@@ -3,7 +3,7 @@ package graft.fuel
 import java.nio.charset.StandardCharsets
 import java.nio.file.{Files, Paths, StandardCopyOption}
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** Static-HTML twin of the reference's Dash dashboard
@@ -17,10 +17,10 @@ import org.apache.spark.sql.functions._
   * equivalent of the reference's per-interval Dash callback refresh.
   *
   * Scale note: everything collected here is presentation-bounded —
-  * ≤|fuel types| bar rows, ≤|fuel types|×|days| line points, and an
-  * explicit `LIMIT` on the station table. The heavy lifting (latest-
-  * per-group, joins) stays distributed in [[FuelQueries]]; only the
-  * chart-sized result crosses to the driver.
+  * ≤|fuel types| bar rows, ≤|fuel types|×|days| line points, and one
+  * Q-map row per station, shared by the station table and the map.
+  * The heavy lifting (latest-per-group, joins) stays distributed in
+  * [[FuelQueries]]; only the chart-sized result crosses to the driver.
   *
   * Charts follow the data-viz method: one measure over categories →
   * single-hue bars (category identity lives on the axis); the
@@ -216,26 +216,18 @@ object FuelDashboard {
        |</body></html>""".stripMargin
   }
 
-  /** Render from the warehouse frames. `maxStations` caps the table
-    * (LIMIT pushed into the plan, not a driver-side cut).
-    * `precomputedQMap` lets a caller that already ran the flagship
-    * join (the pipeline's live view) reuse it instead of paying the
-    * broadcast join + string-agg twice per tick.
-    */
-  def render(
-      prices: DataFrame,
-      stations: DataFrame,
-      maxStations: Int = 20,
-      generatedAt: String = "n/a",
-      precomputedQMap: Option[DataFrame] = None,
-      refreshSecs: Int = 0): String = {
-    val bar = FuelQueries.qBar(prices)
+  /** Q-bar surface: mean price per fuel type, in fuel-type order. */
+  def bar(prices: DataFrame): Seq[(String, Double)] =
+    FuelQueries.qBar(prices)
       .orderBy("fueltype")
       .collect().map(r => r.getString(0) -> r.getDouble(1)).toSeq
-    // Daily average per fuel type — the chart-sized reduction of
-    // qLine's full ordered series (which is a parity surface, not a
-    // plottable one).
-    val line = FuelQueries.qLine(prices)
+
+  /** Q-line surface: daily average per fuel type — the chart-sized
+    * reduction of qLine's full ordered series (which is a parity
+    * surface, not a plottable one).
+    */
+  def line(prices: DataFrame): Seq[(String, Seq[(Long, Double)])] =
+    FuelQueries.qLine(prices)
       .groupBy(col("fueltype"),
         date_trunc("day", col("lastupdated")).cast("timestamp").as("day"))
       .agg(avg("price").as("p"))
@@ -244,25 +236,51 @@ object FuelDashboard {
       .map(r => (r.getString(0), r.getTimestamp(1).getTime, r.getDouble(2)))
       .groupBy(_._1).toSeq.sortBy(_._1)
       .map { case (ft, xs) => ft -> xs.map(x => (x._2, x._3)).toSeq }
-    val qmap = precomputedQMap.getOrElse(FuelQueries.qMap(stations, prices))
-    val stationRows = qmap
-      .orderBy("name").limit(maxStations)
-      .select(col("name"), col("brand"),
-        regexp_replace(col("fuelinfo_agg"), "<br>", "; ").as("prices"))
-      .collect().map(r => Seq(r.getString(0), r.getString(1), r.getString(2))).toSeq
-    // Map payload: every station with coordinates (presentation-
-    // bounded — |stations|, the same cardinality the reference ships
-    // into scatter_mapbox), hover = the reference's hover_data set.
-    val geo = qmap
-      .filter(col("location_latitude").isNotNull && col("location_longitude").isNotNull)
-      .select(col("location_longitude").cast("double"),
-        col("location_latitude").cast("double"),
-        concat_ws(" — ", col("name"), col("brand"), col("address"),
-          regexp_replace(col("fuelinfo_agg"), "<br>", "; ")))
-      .collect().map(r => (r.getDouble(0), r.getDouble(1), r.getString(2))).toSeq
+
+  /** Q-map surface: the [[FuelQueries.qMap]] rows, collected once in
+    * `name` order. The station table takes the first rows and the map
+    * every located station (presentation-bounded — |stations|, the
+    * same cardinality the reference ships into scatter_mapbox).
+    */
+  def qMapRows(qmap: DataFrame): Seq[Row] =
+    qmap.orderBy("name").collect().toSeq
+
+  private def priceList(qmapRow: Row): String =
+    Option(qmapRow.getAs[String]("fuelinfo_agg")).map(_.replace("<br>", "; ")).orNull
+
+  /** The page from collected surfaces: the first `maxStations` Q-map
+    * rows fill the station table; the map's hover carries the
+    * reference's hover_data set (name, brand, address, prices).
+    */
+  def page(
+      bar: Seq[(String, Double)],
+      line: Seq[(String, Seq[(Long, Double)])],
+      qmap: Seq[Row],
+      generatedAt: String,
+      refreshSecs: Int,
+      maxStations: Int = 20): String = {
+    val stationRows = qmap.take(maxStations).map(r =>
+      Seq(r.getAs[String]("name"), r.getAs[String]("brand"), priceList(r)))
+    val geo = qmap.collect {
+      case r if !r.isNullAt(r.fieldIndex("location_latitude")) &&
+          !r.isNullAt(r.fieldIndex("location_longitude")) =>
+        (r.getAs[Double]("location_longitude"), r.getAs[Double]("location_latitude"),
+          Seq(r.getAs[String]("name"), r.getAs[String]("brand"), r.getAs[String]("address"),
+            priceList(r)).filter(_ != null).mkString(" — "))
+    }
     html(bar, line, Seq("station", "brand", "latest prices"), stationRows, generatedAt,
       refreshSecs, geo)
   }
+
+  /** Render from the warehouse frames: one collection per surface. */
+  def render(
+      prices: DataFrame,
+      stations: DataFrame,
+      maxStations: Int = 20,
+      generatedAt: String = "n/a",
+      refreshSecs: Int = 0): String =
+    page(bar(prices), line(prices), qMapRows(FuelQueries.qMap(stations, prices)),
+      generatedAt, refreshSecs, maxStations)
 
   /** Atomic publish: write to a temp sibling, then rename — readers
     * never observe a half-written dashboard (same discipline as the

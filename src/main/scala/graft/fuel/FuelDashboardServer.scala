@@ -16,7 +16,8 @@ import com.sun.net.httpserver.{HttpExchange, HttpServer}
   * OAuth2 REST source):
   *
   *  - `GET /` serves the CURRENT dashboard html (the file
-  *    [[FuelPipeline]]'s live tick atomically republishes), with a
+  *    [[FuelPipeline]]'s `ingest_prices` tick atomically republishes
+  *    after each warehouse append), with a
   *    three-line `EventSource` script injected before `</body>` and
   *    any meta-refresh tag stripped — the browser holds ONE idle
   *    connection instead of polling;

@@ -1,28 +1,34 @@
 package graft.fuel
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import scala.jdk.CollectionConverters._
+import scala.util.control.NonFatal
+
+import org.apache.spark.sql.{AnalysisException, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{OutputMode, Trigger}
+import org.apache.spark.sql.streaming.{OutputMode, StreamingQuery, Trigger}
 
 import graft.sources.Warehouse
-import graft.streaming.StreamOps
 
 /** The reference pipeline end-to-end (SURVEY.md §3 entry point 3) as
-  * one Structured Streaming program:
+  * two Structured Streaming queries:
   *
   * {{{
-  * JSONL source dir (stand-in for the MQTT raw topics — transport,
+  * JSONL source dirs (stand-in for the MQTT raw topics — transport,
   *   not semantics)
-  *   → cleaning with dead-letter split        (P2–P8)
-  *   → parquet warehouse, batched appends     (S8–S10)
-  *   → live views: Q-bar (complete mode) + latest-per-group
+  *   → cleaning; invalid rows split off as FuelCleaning's `rejected`
+  *                                            (P2–P8)
+  * ingest_stations: first-wins dedup → warehouse `stations` append
+  * ingest_prices, one tick per micro-batch:
+  *   → warehouse `prices` append               (S8–S10)
+  *   → from that post-append snapshot: Q-bar → `fuel_qbar_live`,
+  *     Q-map → `fuel_qmap_live`, dashboard republish  (St5)
   * }}}
   *
   * Usage: `runMain graft.fuel.FuelPipeline <pricesDir> <stationsDir>
-  * <warehouseDir>` — reads any *.jsonl placed in the source dirs,
-  * processes each file exactly once (file-source offsets +
-  * checkpoints under `<warehouseDir>/_checkpoints` = the reference's
-  * high-water-mark St1, done by the engine, durable across
+  * <warehouseDir> [dashboard.html [port]]` — reads any *.jsonl placed
+  * in the source dirs, processes each file exactly once (file-source
+  * offsets + checkpoints under `<warehouseDir>/_checkpoints` = the
+  * reference's high-water-mark St1, done by the engine, durable across
   * restarts), stops when idle.
   */
 object FuelPipeline {
@@ -40,25 +46,16 @@ object FuelPipeline {
     val qs = start(spark, pricesDir, stationsDir, warehouseDir, dashboardPath)
     qs.foreach(_.processAllAvailable())
     qs.foreach(_.stop())
-    val stored = spark.read.parquet(s"$warehouseDir/prices")
-    println(s"[pipeline] warehouse prices rows=${stored.count()}")
+    // A one-shot run can drain its prices before the stations land, so
+    // the last tick may have had no station dimension to join: publish
+    // once more over the final warehouse (without the live page's
+    // refresh — the run is over).
+    publish(spark, warehouseDir, dashboardPath, refreshSecs = 0)
+    println(s"[pipeline] warehouse prices rows=${Warehouse.readTable(spark, s"$warehouseDir/prices").count()}")
     println(s"[pipeline] live qbar:")
     spark.table("fuel_qbar_live").orderBy("fueltype").show(20, truncate = false)
-    // One-shot runs may finish before the 1 s live-map trigger fires
-    // with the warehouse in place; report the standing query straight
-    // off the warehouse (what the live view converges to).
-    val storedStations = spark.read.parquet(s"$warehouseDir/stations")
-    val qmap = FuelQueries.qMap(storedStations, stored)
-    println(s"[pipeline] qmap rows=${qmap.count()}")
-    // One-shot runs can drain before the live-map tick sees a
-    // populated warehouse; publish the converged dashboard here (the
-    // same render the per-tick republish produces once data exists).
-    dashboardPath.foreach { p =>
-      FuelDashboard.writeAtomic(p, FuelDashboard.render(
-        stored, storedStations,
-        generatedAt = java.time.Instant.now().toString))
-      println(s"[pipeline] dashboard -> $p")
-    }
+    println(s"[pipeline] qmap rows=${spark.table("fuel_qmap_live").count()}")
+    dashboardPath.foreach(p => println(s"[pipeline] dashboard -> $p"))
     dashServer.foreach(_.close())
     spark.stop()
   }
@@ -111,7 +108,7 @@ object FuelPipeline {
   def startRouted(
       spark: SparkSession,
       mixedDir: String,
-      warehouseDir: String): org.apache.spark.sql.streaming.StreamingQuery = {
+      warehouseDir: String): StreamingQuery = {
     spark.readStream
       .text(mixedDir)
       .writeStream
@@ -133,13 +130,15 @@ object FuelPipeline {
       .start()
   }
 
-  /** Wire and start the three streaming queries; returns them running. */
+  /** Wire and start the two streaming queries; returns them running.
+    * With a `dashboardPath`, every price tick republishes the page.
+    */
   def start(
       spark: SparkSession,
       pricesDir: String,
       stationsDir: String,
       warehouseDir: String,
-      dashboardPath: Option[String] = None): Seq[org.apache.spark.sql.streaming.StreamingQuery] = {
+      dashboardPath: Option[String] = None): Seq[StreamingQuery] = {
 
     val rawPrices = spark.readStream
       .schema(FuelModel.rawPriceSchema)
@@ -151,14 +150,22 @@ object FuelPipeline {
     val prices = FuelCleaning.cleanPrices(rawPrices)
     val stations = FuelCleaning.cleanStations(rawStations)
 
-    // Warehouse ingest: batched appends per micro-batch (the
-    // reference does one row/connection/commit per message —
-    // SURVEY §6; foreachBatch restores sane write granularity).
-    // Dead letters land next to the tables, with reasons.
+    // One price stream per tick (the D-Streams fixed per-batch cost
+    // paid once): the warehouse gets a batched append per micro-batch
+    // (the reference does one row/connection/commit per message —
+    // SURVEY §6), then the live views and the dashboard republish from
+    // the warehouse as that append left it, so a tick always shows its
+    // own rows. Only the append may fail the batch: the publish is
+    // best-effort, so a file-source retry never re-appends rows
+    // because a view or the page failed.
     val ingestPrices = prices.valid.writeStream
       .outputMode(OutputMode.Append)
       .foreachBatch { (batch: DataFrame, _: Long) =>
         Warehouse.append(Warehouse.withSurrogateId(batch), s"$warehouseDir/prices")
+        try publish(spark, warehouseDir, dashboardPath, refreshSecs = 2)
+        catch { case NonFatal(e) =>
+          System.err.println(s"[pipeline] live publish failed: ${e.getMessage}")
+        }
       }
       .queryName("ingest_prices")
       .option("checkpointLocation", s"$warehouseDir/_checkpoints/ingest_prices")
@@ -178,54 +185,40 @@ object FuelPipeline {
       .trigger(Trigger.ProcessingTime(1000L))
       .start()
 
-    // Dashboard live view: the standing Q-bar aggregation, complete
-    // mode, 1 s trigger (St5) — incremental, not recompute-per-tick.
-    val live = StreamOps.liveView(
-      StreamOps.qBarStream(prices.valid), "fuel_qbar_live", 1000L)
+    Seq(ingestPrices, ingestStations)
+  }
 
-    // Live Q-map: the flagship join needs the *current* station
-    // dimension per tick, so it runs as a per-micro-batch batch query
-    // (stream→foreachBatch→FuelQueries.qMap against the warehouse
-    // dimension) — the streaming twin of the dashboard's 1 s
-    // recompute, but incremental on the stream side.
-    val liveMap = prices.valid.writeStream
-      .outputMode(OutputMode.Append)
-      .foreachBatch { (_: DataFrame, _: Long) =>
-        val sp = spark
-        val stationsNow =
-          try Warehouse.readTable(sp, s"$warehouseDir/stations")
-          catch { case _: Throwable => null }
-        val pricesNow =
-          try Warehouse.readTable(sp, s"$warehouseDir/prices")
-          catch { case _: Throwable => null }
-        if (stationsNow != null && pricesNow != null) {
-          val qm = FuelQueries.qMap(stationsNow, pricesNow)
-          qm.createOrReplaceTempView("fuel_qmap_live")
-          // Live dashboard: atomically republish the static-HTML twin
-          // each tick — the engine-side equivalent of the reference's
-          // Dash interval callback (`DataAnalysis.py:73-89`). The
-          // flagship join is reused, not recomputed; a failed publish
-          // is best-effort (same posture as the readTable guards) —
-          // it must not kill the streaming query.
-          dashboardPath.foreach { p =>
-            try FuelDashboard.writeAtomic(p, FuelDashboard.render(
-              pricesNow, stationsNow,
-              generatedAt = java.time.Instant.now().toString,
-              precomputedQMap = Some(qm),
-              // browser polls the republished file ≈ the Dash
-              // interval callback's live refresh
-              refreshSecs = 2))
-            catch { case e: Throwable =>
-              System.err.println(s"[pipeline] dashboard publish failed: ${e.getMessage}")
-            }
-          }
-        }
+  /** Publish the standing queries over the warehouse as it is now, in
+    * the outer session: the Q-bar rows as the `fuel_qbar_live` temp
+    * view, then — once stations exist — the Q-map rows as
+    * `fuel_qmap_live` and, with a `dashboardPath`, the dashboard
+    * (atomic rename; the engine-side equivalent of the reference's
+    * Dash interval callback, `DataAnalysis.py:73-89`). Each surface is
+    * collected once and shared by the view and the page.
+    */
+  private def publish(
+      spark: SparkSession,
+      warehouseDir: String,
+      dashboardPath: Option[String],
+      refreshSecs: Int): Unit = {
+    val prices = Warehouse.readTable(spark, s"$warehouseDir/prices")
+    val bar = FuelDashboard.bar(prices)
+    spark.createDataFrame(bar).toDF("fueltype", "avg_price")
+      .createOrReplaceTempView("fuel_qbar_live")
+    val stations =
+      try Some(Warehouse.readTable(spark, s"$warehouseDir/stations"))
+      catch { case _: AnalysisException => None } // no station landed yet
+    stations.foreach { st =>
+      val qmap = FuelQueries.qMap(st, prices)
+      val qmapRows = FuelDashboard.qMapRows(qmap)
+      spark.createDataFrame(qmapRows.asJava, qmap.schema)
+        .createOrReplaceTempView("fuel_qmap_live")
+      dashboardPath.foreach { p =>
+        FuelDashboard.writeAtomic(p, FuelDashboard.page(
+          bar, FuelDashboard.line(prices), qmapRows,
+          generatedAt = java.time.Instant.now().toString,
+          refreshSecs = refreshSecs))
       }
-      .queryName("qmap_live")
-      .option("checkpointLocation", s"$warehouseDir/_checkpoints/qmap_live")
-      .trigger(Trigger.ProcessingTime(1000L))
-      .start()
-
-    Seq(ingestPrices, ingestStations, live, liveMap)
+    }
   }
 }

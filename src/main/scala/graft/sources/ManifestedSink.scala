@@ -72,13 +72,30 @@ object ManifestedSink {
   private val cacheMaxBytesKey = "spark.graft.manifest.cacheMaxBytes"
   private val defaultCacheMaxBytes = 256L << 20
 
-  private def manifestFingerprint(
-      fs: FileSystem, manifestDir: String): Set[(String, Long, Long)] = {
-    val p = new Path(manifestDir)
-    if (!fs.exists(p)) Set.empty
-    else fs.listStatus(p).toSeq
-      .filter(s => s.isFile && !s.getPath.getName.startsWith("_"))
-      .map(s => (s.getPath.getName, s.getModificationTime, s.getLen)).toSet
+  /** `(relative path, mtime, length)` of every leaf file under `dir`,
+    * skipping `_`-prefixed files and directories (`_SUCCESS`,
+    * `_temporary`): one recursive fs listing, no Spark job. An in-place
+    * rewrite of any file changes its entry even when no directory entry
+    * changes. Guards every driver-side cache of a table's contents
+    * (this sink's manifest cache, BudgetGate's prior-spend memo).
+    */
+  private[graft] def leafFingerprint(
+      spark: SparkSession, dir: String): Set[(String, Long, Long)] = {
+    val fs = fsOf(spark, dir)
+    val root = new Path(dir)
+    if (!fs.exists(root)) Set.empty
+    else {
+      val base = fs.makeQualified(root).toUri.getPath.stripSuffix("/") + "/"
+      val files = fs.listFiles(root, true)
+      val out = Set.newBuilder[(String, Long, Long)]
+      while (files.hasNext) {
+        val f = files.next()
+        val rel = f.getPath.toUri.getPath.stripPrefix(base)
+        if (!rel.split('/').exists(_.startsWith("_")))
+          out += ((rel, f.getModificationTime, f.getLen))
+      }
+      out.result()
+    }
   }
 
   private def rowBytes(r: org.apache.spark.sql.Row): Long = {
@@ -156,7 +173,7 @@ object ManifestedSink {
     val prior: Option[(org.apache.spark.sql.types.StructType,
         Seq[org.apache.spark.sql.Row])] =
       Option(manifestCache.get(manifestDir))
-        .filter(_.fingerprint == manifestFingerprint(mfs, manifestDir)) match {
+        .filter(_.fingerprint == leafFingerprint(spark, manifestDir)) match {
         case Some(c) => Some((c.schema, c.rows))
         case None =>
           manifestCache.remove(manifestDir)
@@ -222,7 +239,7 @@ object ManifestedSink {
     val bytes = next._2.iterator.map(rowBytes).sum
     if (bytes <= maxBytes)
       manifestCache.put(manifestDir, CachedManifest(
-        manifestFingerprint(mfs, manifestDir), next._1, next._2, bytes))
+        leafFingerprint(spark, manifestDir), next._1, next._2, bytes))
     else manifestCache.remove(manifestDir)
     ()
   }

@@ -5,6 +5,8 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.StreamingQuery
 import org.apache.spark.sql.types._
 
+import graft.sources.ManifestedSink
+
 /** Streaming per-group TOKEN-budget gate — the streaming form of
   * [[graft.operators.Sampling.tokenBudgetPerGroup]]: as documents
   * arrive, each group (language, source, domain …) keeps accepting
@@ -59,7 +61,7 @@ import org.apache.spark.sql.types._
   * re-aggregated the whole state table for a map this gate itself
   * just wrote. The driver now memoizes cumulative per-group spend
   * through the last committed batch, keyed by state dir and guarded
-  * by (expected next batch id, state-dir listing fingerprint) — a
+  * by (expected next batch id, state part-file fingerprint) — a
   * restart, a replayed batch id, or ANY out-of-band state rewrite
   * misses the guard and falls back to the parquet aggregate. Both
   * resolution paths use it.
@@ -84,7 +86,7 @@ object BudgetGate {
   // ---- prior-spent memo ----
   private final case class PriorMemo(
       nextBatchId: Long,
-      fingerprint: Set[(String, Long)],
+      fingerprint: Set[(String, Long, Long)],
       spent: Map[String, Long])
 
   private val priorCache =
@@ -92,18 +94,6 @@ object BudgetGate {
 
   /** Test/ops hook: drop every memoized prior (fresh-JVM state). */
   private[graft] def invalidatePriorCache(): Unit = priorCache.clear()
-
-  // (batch-partition dir name, mtime) pairs — rewrites of a replayed
-  // partition change the dir's mtime, new batches change the name set
-  private def stateFingerprint(
-      spark: SparkSession, stateDir: String): Set[(String, Long)] = {
-    val p = new org.apache.hadoop.fs.Path(stateDir)
-    val fs = p.getFileSystem(spark.sessionState.newHadoopConf())
-    if (!fs.exists(p)) Set.empty
-    else fs.listStatus(p).toSeq
-      .filter(s => s.isDirectory && s.getPath.getName.startsWith("batch_id="))
-      .map(s => (s.getPath.getName, s.getModificationTime)).toSet
-  }
 
   /** Per-group spend over batches strictly before `batchId` — memo
     * hit: zero jobs; miss: the old one-aggregate read. Null groups
@@ -114,7 +104,7 @@ object BudgetGate {
       spark: SparkSession, stateDir: String, batchId: Long): Map[String, Long] = {
     val memo = Option(priorCache.get(stateDir)).filter(m =>
       m.nextBatchId == batchId &&
-        m.fingerprint == stateFingerprint(spark, stateDir))
+        m.fingerprint == ManifestedSink.leafFingerprint(spark, stateDir))
     memo match {
       case Some(m) => m.spent
       case None =>
@@ -135,7 +125,7 @@ object BudgetGate {
       else acc.updated(g, Math.addExact(acc.getOrElse(g, 0L), d))
     }
     priorCache.put(stateDir,
-      PriorMemo(batchId + 1, stateFingerprint(spark, stateDir), merged))
+      PriorMemo(batchId + 1, ManifestedSink.leafFingerprint(spark, stateDir), merged))
     ()
   }
 

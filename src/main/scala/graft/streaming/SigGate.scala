@@ -311,12 +311,12 @@ private[graft] object SigGate {
     val docSig = scala.collection.mutable.HashMap.empty[Any, Any]
     val groups = scala.collection.mutable.HashMap
       .empty[(Any, Any), scala.collection.mutable.ArrayBuffer[Any]]
-    var sawNullId = false
+    var sawNull = false
     compactBanded match {
       case Some(cb) =>
         cb.collect().foreach { row =>
           val id = row.get(0)
-          if (id == null) sawNullId = true
+          if (id == null || row.isNullAt(1) || row.isNullAt(2)) sawNull = true
           else {
             docSig.update(id, row.get(1))
             row.getSeq[org.apache.spark.sql.Row](2).foreach { b =>
@@ -330,7 +330,7 @@ private[graft] object SigGate {
           .select(col("doc_id"), col("sig"), col("band"), col("bucket"))
           .collect().foreach { row =>
             val id = row.get(0)
-            if (id == null) sawNullId = true
+            if (id == null || row.isNullAt(1)) sawNull = true
             else {
               docSig.update(id, row.get(1))
               groups.getOrElseUpdate((row.get(2), row.get(3)),
@@ -338,14 +338,16 @@ private[graft] object SigGate {
             }
           }
     }
-    if (sawNullId) {
-      // a null id NPEs local min/union-find, and the distributed path
-      // defines null semantics through join predicates (nulls never
-      // pair, exact-mode state drops them) — route out-of-contract
-      // batches there instead of replicating null algebra here
+    if (sawNull) {
+      // a null id NPEs local min/union-find, a null signature or
+      // banding array NPEs candidate generation, and the distributed
+      // path defines null semantics through join predicates (nulls
+      // never pair, exact-mode state drops them) — route
+      // out-of-contract batches there instead of replicating null
+      // algebra here
       org.slf4j.LoggerFactory.getLogger("graft.SigGate").warn(
-        "driver-resolve: null doc_id in batch — falling back to the " +
-          "distributed resolution for this batch")
+        "driver-resolve: null doc_id or signature in batch — falling " +
+          "back to the distributed resolution for this batch")
       return None
     }
     val cand = scala.collection.mutable.HashSet.empty[(Any, Any)]

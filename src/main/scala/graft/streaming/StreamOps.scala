@@ -2,9 +2,9 @@ package graft.streaming
 
 import java.sql.Timestamp
 
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.{DataFrame, Dataset}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{DataStreamWriter, GroupState, GroupStateTimeout, OutputMode, StreamingQuery, Trigger}
+import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 
 import graft.fuel.FuelModel.PriceRecord
 
@@ -91,31 +91,6 @@ object StreamOps {
   def retentionPerBatch(batch: DataFrame, tsCol: String, days: Int): DataFrame =
     graft.operators.Relational.retentionFilter(batch, tsCol, days)
 
-  /** St5 — periodic re-evaluation (`DataAnalysis.py:59-63`): run any
-    * aggregation query in complete mode against an in-memory sink the
-    * dashboard reads — Spark's incremental aggregation replaces the
-    * reference's from-scratch recompute every second.
-    */
-  def liveView(
-      agg: DataFrame,
-      name: String,
-      intervalMs: Long = 1000L): StreamingQuery =
-    agg.writeStream
-      .outputMode(OutputMode.Complete)
-      .format("memory")
-      .queryName(name)
-      .trigger(Trigger.ProcessingTime(intervalMs))
-      .start()
-
-  /** Streaming Q-bar: same aggregation as the batch query, running
-    * mean over all messages ever received (complete mode — the
-    * reference's unbounded history, SURVEY §2 St4, without the
-    * unbounded driver memory).
-    */
-  def qBarStream(prices: DataFrame): DataFrame =
-    prices.groupBy("fueltype")
-      .agg(round(avg("price"), 2).as("avg_price"))
-
   /** Streaming latest-per-group (A3): `max_by` aggregation in update/
     * complete mode — `dropDuplicates` can't express *latest*
     * (SURVEY §2 A3 note), an aggregation can.
@@ -190,12 +165,4 @@ object StreamOps {
       && col(rightTs) >= col(leftTs) - expr(s"INTERVAL $maxDelay")
       && col(rightTs) <= col(leftTs) + expr(s"INTERVAL $maxDelay"))
   }
-
-  /** Fan-out helper — two independent sinks over one source stream
-    * (SURVEY §2 S7: warehouse consumer + dashboard consumer).
-    */
-  def fanOut(df: DataFrame)(
-      f: DataFrame => DataStreamWriter[org.apache.spark.sql.Row],
-      g: DataFrame => DataStreamWriter[org.apache.spark.sql.Row]): Seq[StreamingQuery] =
-    Seq(f(df).start(), g(df).start())
 }

@@ -128,6 +128,37 @@ class BudgetGateDriverResolveSpec extends SparkSpecBase {
     // before = 90 < 100 fits too — a stale memo (prior 90) would have
     // rejected the second
     assert(a1.size === 2)
+
+    // an in-place rewrite of a part file inside batch_id=0 changes no
+    // directory entry (names and dir mtimes stay) — only the leaf
+    // file's own (mtime, length) can reveal it
+    val inPlace = tmp("bgdr_inplace")
+    def stepIn(dir: String, b: org.apache.spark.sql.DataFrame, id: Long) =
+      BudgetGate.acceptBatch(b, id, "grp_col", "doc_id", "n_tokens",
+        dir, budget = 100L).select("doc_id").as[Long].collect().toSet
+    stepIn(inPlace, Seq((1L, Some("en"), Some(90L))).toDF("doc_id", "grp_col", "n_tokens"), 0L)
+    // the replacement bytes: the same batch spending 5, written elsewhere
+    val other = tmp("bgdr_inplace_src")
+    stepIn(other, Seq((1L, Some("en"), Some(5L))).toDF("doc_id", "grp_col", "n_tokens"), 0L)
+    def partFiles(dir: String) = {
+      val s = java.nio.file.Files.list(java.nio.file.Paths.get(dir, "batch_id=0"))
+      try s.iterator().asScala.toSeq.filter(_.getFileName.toString.startsWith("part-"))
+      finally s.close()
+    }
+    def crc(f: java.nio.file.Path) = f.resolveSibling(s".${f.getFileName}.crc")
+    val Seq(target) = partFiles(inPlace)
+    val Seq(source) = partFiles(other)
+    val dirMtime = java.nio.file.Files.getLastModifiedTime(target.getParent)
+    // overwrite the existing files' bytes (truncate + write, no rename)
+    java.nio.file.Files.write(target, java.nio.file.Files.readAllBytes(source))
+    java.nio.file.Files.write(crc(target), java.nio.file.Files.readAllBytes(crc(source)))
+    assert(java.nio.file.Files.getLastModifiedTime(target.getParent) === dirMtime)
+    val a2 = stepIn(inPlace,
+      Seq((2L, Some("en"), Some(50L)), (3L, Some("en"), Some(50L)))
+        .toDF("doc_id", "grp_col", "n_tokens"), 1L)
+    // en's prior is now 5: both fit (before 5, then 55) — the stale
+    // memo (prior 90) would have rejected the second (before 140)
+    assert(a2 === Set(2L, 3L))
   }
 
   test("non-driverable shapes route distributed: string ids, disabled cap") {

@@ -112,6 +112,61 @@ class SigGateDriverResolveSpec extends SparkSpecBase {
     assert(accD === Set(10L, 20L))
   }
 
+  test("a null signature declines the driver path and matches the distributed semantics") {
+    // null text → null MinHash signature and null banding array: the
+    // per-doc collect must not NPE on it
+    def run(forceDistributed: Boolean): (Set[Long], Long) = {
+      val prev = spark.conf.getOption(pairsCapKey)
+      if (forceDistributed) spark.conf.set(pairsCapKey, "0")
+      val engagedBefore = graft.streaming.SigGate.driverResolved.get()
+      try {
+        val state = tmp("sgdr_nullsig")
+        val b = Seq(10L -> Some(baseA), 11L -> Some(baseA),
+            12L -> Option.empty[String], 20L -> Some(baseB))
+          .toDF("doc_id", "text")
+        val acc = NearDupGate.acceptBatch(b, 0L, "doc_id", "text", state)
+          .select("doc_id").as[Long].collect().toSet
+        (acc, graft.streaming.SigGate.driverResolved.get() - engagedBefore)
+      } finally {
+        prev match {
+          case Some(v) => spark.conf.set(pairsCapKey, v)
+          case None => spark.conf.unset(pairsCapKey)
+        }
+      }
+    }
+    val (accD, engaged) = run(forceDistributed = false)
+    val (accX, _) = run(forceDistributed = true)
+    assert(engaged === 0L, "a null signature must fall back to the distributed path")
+    assert(accD === accX)
+    assert(accD.contains(10L) && !accD.contains(11L) && accD.contains(20L))
+
+    // the exploded form: a null 64-bit signature still yields band rows
+    // (null buckets), which must not group null-signature docs together
+    def runH64(forceDistributed: Boolean): (Set[Long], Long) = {
+      val prev = spark.conf.getOption(pairsCapKey)
+      if (forceDistributed) spark.conf.set(pairsCapKey, "0")
+      val engagedBefore = graft.streaming.SigGate.driverResolved.get()
+      try {
+        val b = Seq(10L -> Some(0xDEADBEEFL), 11L -> Some(0xDEADBEEFL ^ 1L),
+            12L -> Option.empty[Long], 13L -> Option.empty[Long])
+          .toDF("doc_id", "sig")
+        val acc = Hamming64Gate.acceptBatch(b, 0L, "doc_id", "sig", tmp("sgdr_h64null"))
+          .select("doc_id").as[Long].collect().toSet
+        (acc, graft.streaming.SigGate.driverResolved.get() - engagedBefore)
+      } finally {
+        prev match {
+          case Some(v) => spark.conf.set(pairsCapKey, v)
+          case None => spark.conf.unset(pairsCapKey)
+        }
+      }
+    }
+    val (accHD, engagedH) = runH64(forceDistributed = false)
+    val (accHX, _) = runH64(forceDistributed = true)
+    assert(engagedH === 0L, "a null signature must fall back to the distributed path")
+    assert(accHD === accHX)
+    assert(accHD === Set(10L, 12L, 13L))
+  }
+
   test("estJaccardPassDriver ≡ the Column form over the full lane-match lattice") {
     // every possible match count m ∈ [0, 64] — includes the HALF_UP
     // boundary cases (m ≡ 2 mod 4 gives a 5th decimal of exactly 5)

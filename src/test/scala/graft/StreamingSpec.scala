@@ -96,7 +96,7 @@ class StreamingSpec extends SparkSpecBase {
 
   test("St4/St5 complete-mode Q-bar equals its batch twin on the same data") {
     val input = MemoryStream[PriceRecord](spark)
-    val live = StreamOps.qBarStream(input.toDF())
+    val live = graft.fuel.FuelQueries.qBar(input.toDF())
     val q = live.writeStream
       .format("memory").queryName("qbar_live").outputMode(OutputMode.Complete).start()
     try {
